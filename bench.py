@@ -125,7 +125,9 @@ def run_crawl_bench(spark):
         num_partitions=PARTS,
         broadcast_pages=False,  # the web is not broadcastable at scale
         use_bloom=True,  # the flagship URL-seen component, on in the bench
-        seen_probe="broadcast",  # stream the seen set, never shuffle it
+        # no round reaches this budget: every round takes the broadcast
+        # probe (streams the seen set, never shuffles it)
+        broadcast_probe_max_bytes=1 << 62,
     )
     t0 = time.time()
     result = Crawler(spark, pages_df, cfg).run(seeds_df)

@@ -538,22 +538,12 @@ def pd_canonize(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
 
 def register_udfs():
     """Create the pandas UDF objects (deferred import so pure-Python callers
-    never need a JVM). CRAWLSPARK_UDF_STATS=1 makes every worker append
-    per-batch (rows, seconds) lines to /tmp/crawlspark_udf_stats.log —
-    the tool for spotting silent recomputation of UDF stages."""
+    never need a JVM)."""
     import contextlib
     import gc as _gc
-    import os as _os
-    import time as _time
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    stats = _os.environ.get("CRAWLSPARK_UDF_STATS") == "1"
-
-    def _log(name, n, dt):
-        with open("/tmp/crawlspark_udf_stats.log", "a") as f:
-            f.write(f"{name} {n} {dt:.3f} pid={_os.getpid()}\n")
 
     @contextlib.contextmanager
     def _no_gc():
@@ -571,21 +561,13 @@ def register_udfs():
 
     @F.pandas_udf(T.StringType())
     def url_key_udf(urls: pd.Series) -> pd.Series:
-        t0 = _time.time()
         with _no_gc():
-            out = pd_url_key(urls)
-        if stats:
-            _log("url_key", len(urls), _time.time() - t0)
-        return out
+            return pd_url_key(urls)
 
     @F.pandas_udf(T.StringType())
     def resolve_udf(parent_urls: pd.Series, hrefs: pd.Series) -> pd.Series:
-        t0 = _time.time()
         with _no_gc():
-            out = pd_resolve(parent_urls, hrefs)
-        if stats:
-            _log("resolve", len(hrefs), _time.time() - t0)
-        return out
+            return pd_resolve(parent_urls, hrefs)
 
     canon_t = T.StructType(
         [
@@ -597,12 +579,8 @@ def register_udfs():
 
     @F.pandas_udf(canon_t)
     def canonize_udf(parent_urls: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
-        t0 = _time.time()
         with _no_gc():
-            out = pd_canonize(parent_urls, hrefs)
-        if stats:
-            _log("canonize", len(hrefs), _time.time() - t0)
-        return out
+            return pd_canonize(parent_urls, hrefs)
 
     # NOTE on double evaluation: a deterministic Python UDF referenced by
     # both a Filter and a Project gets cloned by filter pushdown and was

@@ -27,42 +27,28 @@ order, seen set, and span documents. Verified against crawlspark.oracle.
 
 from __future__ import annotations
 
-import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import dedup_candidates
-from .parse import parse_stage
+from .frontier import dedup_candidates, order_buckets
+from .parse import mark_dirty, parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
 from .schemas import SEEDS
 from .storage import CheckpointStore
 
-_DEBUG_TIMING = os.environ.get("CRAWLSPARK_DEBUG_TIMING") == "1"
-
-
-def _cands_storage_level():
-    """Storage level for the per-round cands_raw cache. Default
-    MEMORY_AND_DISK (heap-columnar). CRAWLSPARK_CANDS_CACHE=disk selects
-    DISK_ONLY: with spark.local.dir on tmpfs the blocks still live in
-    RAM (OS page cache) but stay OFF the executor heap — at multi-million
-    -link rounds the heap-columnar build of this cache competes with the
-    aggregation's execution memory inside the crawl's largest stage."""
-    from pyspark import StorageLevel
-
-    return (
-        StorageLevel.DISK_ONLY
-        if os.environ.get("CRAWLSPARK_CANDS_CACHE", "").lower() == "disk"
-        else StorageLevel.MEMORY_AND_DISK
-    )
+# seen-probe guard: a round's candidate-key set is estimated as its
+# accepted count × this many bytes (url_key strings plus hash-relation
+# overhead) against CrawlConfig.broadcast_probe_max_bytes
+_PROBE_KEY_BYTES = 128
 
 
 def _parallel_jobs(*thunks) -> list:
@@ -84,23 +70,6 @@ def _parallel_jobs(*thunks) -> list:
         return [f.result() for f in futs]
 
 
-class _Tick:
-    """Per-round stage timer (CRAWLSPARK_DEBUG_TIMING=1): prints the wall
-    time between stage marks so scaling work stays measurement-driven."""
-
-    def __init__(self, label: str):
-        self.label = label
-        self.t = time.time()
-
-    def __call__(self, stage: str) -> None:
-        if _DEBUG_TIMING:
-            now = time.time()
-            print(f"    [{self.label}] {stage}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-        else:
-            self.t = time.time()
-
-
 @dataclass
 class CrawlConfig:
     checkpoint_dir: str
@@ -119,34 +88,26 @@ class CrawlConfig:
     use_bloom: bool = False
     bloom_buckets: int = 16
     bloom_bits: int = 1 << 20  # 128 KiB per bucket (sandbox-sized default)
-    # Seen-set membership strategy (frontier._anti_seen): "broadcast"
-    # streams the seen table with zero exchange/sort (exact; requires the
-    # per-round candidate-key set to be broadcastable); "merge" is the
-    # plain anti-join for unbounded rounds. Default "auto" picks PER
-    # ROUND from the fused agg's already-collected candidate count: the
-    # broadcast probe is used only while the round's candidate-key set
-    # fits the byte budget below, else the round falls back to merge.
+    # Seen-set membership probe (frontier._anti_seen), picked PER ROUND
+    # from the fused agg's already-collected candidate count: the
+    # "broadcast" probe streams the seen table with zero exchange/sort
+    # and is used only while the round's candidate-key set (estimated at
+    # _PROBE_KEY_BYTES per accepted candidate) fits this byte budget;
+    # larger rounds take the shuffling "merge" anti-join. Both are exact.
     # Nothing else bounds the round (the default config has
-    # host_budget=0 — unbounded), so an unguarded broadcast default
-    # would be a driver-OOM/job-killer at 100x (VERDICT r2 §wrong #1);
-    # the reference's analogue is queue backpressure (queue.go:43-44).
-    seen_probe: str = "auto"
-    # auto-mode byte budget for the broadcast probe; candidate-set size
-    # is estimated as accepted_count × broadcast_probe_key_bytes (url_key
-    # strings plus hash-relation overhead)
+    # host_budget=0 — unbounded), so an unguarded broadcast would be a
+    # driver-OOM/job-killer at 100x (VERDICT r2 §wrong #1); the
+    # reference's analogue is queue backpressure (queue.go:43-44).
     broadcast_probe_max_bytes: int = 64 << 20
-    broadcast_probe_key_bytes: int = 128
-    # Seen-table bucketing (the parquet realization of the Iceberg
-    # bucket(key_hash) partition spec, storage.py): every seen append is
+    # Seen-table bucket count (>= 1): every seen append is
     # directory-partitioned by kbucket = pmod(xxhash64(seen_key), B), and
     # each round's seen read is PRUNED to the buckets the round's
     # candidate keys actually hash into (collected for free inside the
     # fused round agg). Plain parquet cannot declare its hash layout to
     # Catalyst, so the merge anti-join still exchanges the pruned subset
-    # (zero-exchange is Iceberg storage-partitioned-join territory; the
-    # broadcast probe is already exchange-free on the seen side) — but
-    # the scan now touches only matching buckets instead of every file
-    # every round. 0 disables bucketing (flat layout).
+    # (the broadcast probe is already exchange-free on the seen side) —
+    # but the scan touches only matching buckets instead of every file
+    # every round.
     seen_buckets: int = 64
     # Robots crawl-delay → per-host politeness budgets (README.md:9-10):
     # when round_wall_secs > 0, a host with a robots crawl-delay d gets a
@@ -172,19 +133,12 @@ class CrawlConfig:
     # Seen-table compaction cadence: when >= fanin seen batch dirs exist,
     # merge them into one bucket-partitioned dir (storage.compact) so a
     # long crawl's per-round seen scan reads O(fanin x buckets) files
-    # instead of O(rounds x buckets). 0 disables. Only applies with
-    # seen_buckets > 0 (the bucketed layout is the scale path).
+    # instead of O(rounds x buckets). 0 disables.
     seen_compact_fanin: int = 16
-    # Two-tier parse (parse.py native tier): pages passing the clean-page
-    # grammar are link/span-extracted entirely JVM-side; only dirty pages
-    # cross into the exact Arrow parse. Bit-exact either way (routing
-    # equality pinned by tests/test_native_parse.py); the switch exists
-    # for A/B measurement and is also overridable via
-    # CRAWLSPARK_NATIVE_PARSE=0. Hooks (process_fn/remove_fn) force the
-    # exact tier regardless.
-    native_parse: bool = True
 
     def __post_init__(self):
+        if self.seen_buckets < 1:
+            raise ValueError("seen_buckets must be >= 1")
         # accept/reject regexes are evaluated under THREE dialects
         # (Python re in oracle/pandas, Java rlike natively, Go RE2 in the
         # reference) — reject dialect-divergent constructs up front
@@ -227,12 +181,14 @@ class Crawler:
     ):
         self.spark = spark
         self.cfg = config
-        P = config.num_partitions or spark.sparkContext.defaultParallelism
+        self.P = P = (
+            config.num_partitions or spark.sparkContext.defaultParallelism
+        )
         if config.broadcast_pages:
             self.pages = pages
         else:
             # co-locate the web table by the fetch-join key ONCE (the
-            # in-sandbox analogue of bucketing the pages/Iceberg table):
+            # in-sandbox analogue of bucketing the pages table):
             # every round's resolver join then reads this cached layout
             # with no exchange and no sort on the big side.
             # DISK_ONLY, deliberately: the web table (HTML bodies — by far
@@ -245,8 +201,6 @@ class Crawler:
             # spark.local.dir (tmpfs in the bench = OS page cache, zero
             # GC); the cached partitioning still avoids the per-round
             # exchange+sort on the big side.
-            from pyspark import StorageLevel
-
             self.pages = pages.repartition(P, "host", "url_key").persist(
                 StorageLevel.DISK_ONLY
             )
@@ -260,7 +214,6 @@ class Crawler:
         self._robots_compiled = compile_robots(robots_rules)
         self.store = CheckpointStore(spark, config.checkpoint_dir)
         self.udfs = canon.register_udfs()
-        self.P = config.num_partitions or spark.sparkContext.defaultParallelism
         if config.multi_host:
             if config.hosts is not None:
                 # dedupe user-supplied hosts: the accept join is a plain
@@ -312,36 +265,26 @@ class Crawler:
                 )
 
     def _append_seen(self, fresh: DataFrame, batch: int) -> None:
-        """Append fresh keys to the seen table, bucketed by
-        kbucket = pmod(xxhash64(key), seen_buckets) — the parquet
-        realization of the Iceberg bucket(key_hash) partition spec."""
+        """Append fresh keys to the seen table, directory-partitioned by
+        kbucket = pmod(xxhash64(key), seen_buckets)."""
+        buckets = self.cfg.seen_buckets
         rows = fresh.select(
             F.col("seen_key").alias("url_key"),
             F.xxhash64("seen_key").alias("key_hash"),
             F.lit(batch).alias("first_round"),
-        )
-        if self.cfg.seen_buckets > 0:
-            rows = rows.withColumn(
-                "kbucket",
-                F.pmod(F.col("key_hash"), F.lit(self.cfg.seen_buckets)),
-            )
-            # hash-repartition on the bucket BEFORE the partitionBy write:
-            # without it every write task opens a dynamic-partition writer
-            # per bucket it sees (tasks x buckets small files + per-task
-            # writer state — measured 3x task-time inflation of the seen
-            # append at local[8] vs local[2]). With it each bucket is
-            # written by exactly ONE task (single-writer-per-bucket: one
-            # file per bucket dir per round). Note this is NOT
-            # one-bucket-per-task: bucket→partition hash collisions mod
-            # numPartitions can co-locate several buckets in one task
-            # (skewing write tasks, leaving others empty), and with
-            # P < seen_buckets a task necessarily writes several files.
-            rows = rows.repartition(
-                min(self.cfg.seen_buckets, self.P), F.col("kbucket")
-            )
-            self.store.append("seen", rows, batch, partition_by=["kbucket"])
-        else:
-            self.store.append("seen", rows, batch)
+        ).withColumn("kbucket", F.pmod(F.col("key_hash"), F.lit(buckets)))
+        # hash-repartition on the bucket BEFORE the partitionBy write:
+        # without it every write task opens a dynamic-partition writer per
+        # bucket it sees (tasks x buckets small files + per-task writer
+        # state — measured 3x task-time inflation of the seen append at
+        # local[8] vs local[2]). With it each bucket is written by exactly
+        # ONE task (single-writer-per-bucket: one file per bucket dir per
+        # round). Note this is NOT one-bucket-per-task: bucket→partition
+        # hash collisions mod numPartitions can co-locate several buckets
+        # in one task (skewing write tasks, leaving others empty), and
+        # with P < seen_buckets a task necessarily writes several files.
+        rows = rows.repartition(min(buckets, self.P), F.col("kbucket"))
+        self.store.append("seen", rows, batch, partition_by=["kbucket"])
 
     # -- driver-side sinks ---------------------------------------------
     # metrics/lineage/bloom carry O(bytes) per round but each Spark write
@@ -462,7 +405,6 @@ class Crawler:
         offset past max(entry_order), so the only driver traffic is one
         scalar agg. entry_order must be distinct (sitemapsrc emits a
         dense 0..n-1) — ties would make the push order nondeterministic."""
-        tick = _Tick("init")
         order = 0
         smdf = None
         if sitemap_entries is not None:
@@ -506,31 +448,19 @@ class Crawler:
                 "parent_disc", "link_index", "priority",
             )
         )
-        tick("seed cands built")
         # seed dense-order buckets on link_index (= seed_order): one cheap
         # count replaces the range-sampling pass over the canonize chain
         if isinstance(seeds, DataFrame) or smdf is not None:
             n_seed = seeds_df.count()
         else:
             n_seed = len(rows)
-        order_bucket = None
-        if n_seed > 0:
-            order_bucket = F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(self.P - 1),
-                    F.floor(
-                        F.col("link_index").cast("long")
-                        * F.lit(self.P) / F.lit(n_seed)
-                    ),
-                ),
-            )
         res = dedup_candidates(
             cands, None, pushed=0, limit=self.cfg.limit,
             limit_reached=False, num_partitions=self.P,
-            order_bucket=order_bucket,
+            order_bucket=order_buckets(
+                F.col("link_index").cast("long"), 0, n_seed - 1, self.P
+            ),
         )
-        tick("seed dedup")
         # NOTE: reference seed-push failures are logged, not flag-setting
         # (crawler.go:320-329); the flag only matters for parse-time pushes
         # and with a 0-room budget the first parse push trips it anyway —
@@ -557,7 +487,6 @@ class Crawler:
         results = _parallel_jobs(*init_jobs)
         if self.cfg.use_bloom:
             self._roll_bloom_local(results[-1], 0)
-        tick("seed sinks (concurrent)")
         res.unpersist()
         return res.pushed_end, res.limit_reached
 
@@ -594,9 +523,7 @@ class Crawler:
             # — positives always go through the exact anti-join — but
             # they'd charge phantom probe work to the new crawl)
             self._bloom_dict = None
-            tick0 = _Tick("engine init")
             pushed, limit_reached = self._init_frontier(seeds, sitemap_entries)
-            tick0("seed frontier")
             r = 0
             n_frontier = pushed  # round-0 frontier = every successful push
             self.store.write_state(
@@ -630,7 +557,6 @@ class Crawler:
         # truncates any partially-written later batches.
         drained = False
         while cfg.max_rounds == 0 or r < cfg.max_rounds:
-            tick = _Tick(f"engine r{r}")
             if self._next_frontier is not None:
                 # in-memory handoff from the previous round (persisted;
                 # byte-identical rows to the parquet snapshot the commit
@@ -647,7 +573,6 @@ class Crawler:
             if n_frontier is None:
                 # resume from a pre-tracking state file: one-time count
                 n_frontier = frontier.count()
-            tick("frontier read")
             if n_frontier == 0:
                 drained = True
                 break
@@ -669,14 +594,11 @@ class Crawler:
                 crawl_host=None if cfg.multi_host else cfg.host,
                 broadcast_pages=cfg.broadcast_pages,
             )
-            use_native_parse = (
-                cfg.native_parse
-                and cfg.process_fn is None
-                and cfg.remove_fn is None
-                and os.environ.get("CRAWLSPARK_NATIVE_PARSE", "1") != "0"
-            )
+            # two-tier parse: the JVM-native tier takes every clean page
+            # unless a span hook forces the exact tier for all of them
+            native = cfg.process_fn is None and cfg.remove_fn is None
             fetched_handle = None
-            if use_native_parse:
+            if native:
                 # the native/exact tier split scans `fetched` twice (two
                 # disjoint filters); persist the round batch so the fetch
                 # join runs once. DISK_ONLY for the same reason as the
@@ -687,10 +609,6 @@ class Crawler:
                 # streaming the join per tier re-runs the probe-side
                 # hash build and the routing grammar per tier — paired
                 # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
-                from pyspark import StorageLevel
-
-                from .parse import mark_dirty
-
                 # routing flag computed INTO the cache: the clean-page
                 # grammar runs once per page here; the tier filters in
                 # parse_stage read the cached boolean
@@ -702,7 +620,7 @@ class Crawler:
                 fetched,
                 process_fn=cfg.process_fn,
                 remove_fn=cfg.remove_fn,
-                native=use_native_parse,
+                native=native,
             )
             if self.robots is not None:
                 denied_rows = denied.select(
@@ -726,7 +644,6 @@ class Crawler:
                 ),
                 r,
             )
-            tick("fetch+parse+documents write")
             # the order append reads the parsed cache only — submit it
             # from a driver thread so it overlaps the fused agg below
             # (independent sinks; per-round serial latency is the Amdahl
@@ -796,7 +713,7 @@ class Crawler:
                 # measured in round 2).
                 cands_pre = canon.canonize_links_prepared(
                     links, "href"
-                ).persist(_cands_storage_level())
+                ).persist(StorageLevel.MEMORY_AND_DISK)
                 round_handles.append(cands_pre)
                 cands_fast, cands_slow = canon.canonize_links_split(
                     cands_pre, self.udfs["canonize"]
@@ -805,7 +722,7 @@ class Crawler:
                 # exact resolver runs once per dirty link, not once per
                 # consumer (the fused agg materializes it; the dedup scan
                 # reads both caches) — tiny by the two-tier premise
-                cands_slow = cands_slow.persist(_cands_storage_level())
+                cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
                 round_handles.append(cands_slow)
                 cands_raw = cands_fast.unionByName(cands_slow)
 
@@ -881,7 +798,7 @@ class Crawler:
                                     accept_expr,
                                     F.pmod(
                                         F.xxhash64(self._seen_key()),
-                                        F.lit(max(cfg.seen_buckets, 1)),
+                                        F.lit(cfg.seen_buckets),
                                     ),
                                 )
                             ).alias("cbuckets"),
@@ -911,18 +828,14 @@ class Crawler:
                 self.spark.sparkContext.setJobDescription(None)
                 n_sched, n_ok = row["n"], int(row["ok"] or 0)
                 lin = row
-                tick(f"fused stats+lineage agg sched={n_sched}")
                 # first dependence on the previous round's durable state
                 # (seen batch, bloom snapshot, any compaction): join the
                 # pipelined commit chain here — it has been running
                 # concurrently under the whole fetch/parse/agg head
                 self._join_commit()
-                tick("commit join")
                 seen = self.store.read("seen")
-                if (
-                    cfg.seen_buckets > 0
-                    and "kbucket" in seen.columns
-                ):
+                # checkpoints written before seen bucketing have no kbucket
+                if "kbucket" in seen.columns:
                     cbuckets = sorted(
                         int(b) for b in (lin["cbuckets"] or [])
                     )
@@ -942,38 +855,22 @@ class Crawler:
                         bloom_arg = (
                             self.spark, self._bloom_dict, self._bloom_cfg()
                         )
-                probe = cfg.seen_probe
-                if probe == "auto":
-                    # per-round guard: broadcast only while the candidate
-                    # key set (bounded above by the accepted count, known
-                    # from the fused agg — no extra job) fits the byte
-                    # budget; large rounds take the shuffling merge path
-                    est = int(lin["accepted"]) * cfg.broadcast_probe_key_bytes
-                    probe = (
-                        "broadcast"
-                        if est < cfg.broadcast_probe_max_bytes
-                        else "merge"
-                    )
+                # per-round guard: broadcast only while the candidate key
+                # set (bounded above by the accepted count, known from the
+                # fused agg — no extra job) fits the byte budget; large
+                # rounds take the shuffling merge path
+                est = int(lin["accepted"]) * _PROBE_KEY_BYTES
+                probe = (
+                    "broadcast"
+                    if est < cfg.broadcast_probe_max_bytes
+                    else "merge"
+                )
                 self.probe_choices.append(probe)
                 # sampling-free dense order: the accepted parents' disc
                 # range is known from the fused agg, so the global FIFO
                 # index uses analytic order-buckets (monotone in
                 # (parent_disc, link_index)) instead of a sampled range
                 # partitioning — one full pass less per round
-                order_bucket = None
-                if lin["pd_lo"] is not None:
-                    pd_lo = int(lin["pd_lo"])
-                    span = int(lin["pd_hi"]) - pd_lo + 1
-                    order_bucket = F.greatest(
-                        F.lit(0),
-                        F.least(
-                            F.lit(self.P - 1),
-                            F.floor(
-                                (F.col("parent_disc") - F.lit(pd_lo))
-                                * F.lit(self.P) / F.lit(span)
-                            ),
-                        ),
-                    )
                 res = dedup_candidates(
                     cands, seen.select(F.col("url_key").alias("seen_key")),
                     pushed=pushed, limit=cfg.limit,
@@ -981,7 +878,10 @@ class Crawler:
                     bloom=bloom_arg,
                     n_attempts=int(lin["accepted"]) if cfg.limit > 0 else None,
                     seen_probe=probe,
-                    order_bucket=order_bucket,
+                    order_bucket=order_buckets(
+                        F.col("parent_disc"), lin["pd_lo"], lin["pd_hi"],
+                        self.P,
+                    ),
                     attempts_max=(
                         tuple(lin["att_max"])
                         if cfg.limit > 0 and lin["att_max"] is not None
@@ -989,7 +889,6 @@ class Crawler:
                     ),
                 )
                 dedup_res = res
-                tick("dedup")
                 pushed = res.pushed_end
                 limit_reached = res.limit_reached
                 n_kept = res.n_kept
@@ -1027,7 +926,6 @@ class Crawler:
                     F.sum(F.col("fetched_ok").cast("long")).alias("ok"),
                 ).collect()[0]
                 n_sched, n_ok = stats["n"], int(stats["ok"] or 0)
-                tick(f"drain stats agg sched={n_sched}")
 
             # next frontier = carryover ∪ fresh (FIFO: carry first by disc)
             parts = []
@@ -1091,14 +989,21 @@ class Crawler:
                 handles=tuple(_handles), dres=_dedup_res,
                 prev_frontier=_prev_frontier,
             ):
-                results = _parallel_jobs(*jobs) if jobs else []
+                try:
+                    results = _parallel_jobs(*jobs) if jobs else []
+                finally:
+                    # the order append finishes even when a sink failed
+                    opool.shutdown()
                 ofut.result()
-                opool.shutdown()
                 # driver-side sinks (no Spark jobs)
                 self._append_metrics_local(rr, msched, mok, mkept)
                 if lrows is not None:
                     self._append_lineage_local(rr, lrows)
-                if cfg.use_bloom:
+                # post-limit rounds never probe: without fresh keys there
+                # is nothing to roll into a snapshot no one reads
+                if cfg.use_bloom and (
+                    b_idx is not None or not st["limit_reached"]
+                ):
                     self._roll_bloom_local(
                         results[b_idx] if b_idx is not None else None,
                         rr + 1,
@@ -1113,12 +1018,10 @@ class Crawler:
                 # filters compacted dirs on it). Round r+1 cannot observe
                 # a half-compacted table: its seen read happens after
                 # _join_commit.
-                if cfg.seen_compact_fanin > 0 and cfg.seen_buckets > 0:
-                    self.store.maybe_compact(
-                        "seen", upto=rr + 1, partition_by=["kbucket"],
-                        round_col="first_round",
-                        fanin=cfg.seen_compact_fanin,
-                    )
+                self.store.maybe_compact(
+                    "seen", upto=rr + 1, partition_by=["kbucket"],
+                    round_col="first_round", fanin=cfg.seen_compact_fanin,
+                )
                 # release round-r caches (the next frontier is its own
                 # cache, already materialized by the snapshot write above)
                 for h in handles:
@@ -1128,10 +1031,14 @@ class Crawler:
                 if prev_frontier is not None:
                     prev_frontier.unpersist()
 
+            # the previous commit must succeed before this one queues:
+            # a drain round skips the seen-read join above, and an
+            # unjoined failure would be lost while later commits write
+            # state past the torn round (a no-op in any other round)
+            self._join_commit()
             self._pending_commit = self._commit_pool.submit(_commit)
             self._frontier_handle = nxt_core
             self._next_frontier = nxt_core
-            tick("round tail (submitted)")
             r += 1
             if not has_next:
                 drained = True

@@ -1,9 +1,7 @@
-"""Persistent table layer: Iceberg when the runtime is on the classpath,
-plain parquet otherwise, behind one API so nothing above notices
-(SURVEY.md §7 "Iceberg in sandbox").
+"""Persistent table layer: round-versioned parquet tables behind one API.
 
-Layout (parquet mode), all append-only and round-versioned so any round is
-resumable (north rule):
+Layout, all append-only and round-versioned so any round is resumable
+(north rule):
 
     {root}/{table}/batch={round}/part-*.parquet
     {root}/_state.json        — {round, pushed, limit_reached} (atomic rename)
@@ -23,29 +21,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 class CheckpointStore:
-    """Round-versioned append-only table store.
-
-    In Iceberg deployments each table maps to ``writeTo(name).append()`` on
-    an Iceberg table partitioned by ``bucket(key_hash)`` (seen) or
-    ``batch`` (everything else); the parquet fallback reproduces the same
-    append/snapshot semantics with directory partitions.
-    """
+    """Round-versioned append-only table store: one ``batch={round}``
+    directory partition per append (seen is further split by kbucket)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self.iceberg = iceberg_available(spark)
         self._recover_compactions()
 
     # -- tables ---------------------------------------------------------
@@ -59,8 +42,7 @@ class CheckpointStore:
         path = os.path.join(self._table_path(table), f"batch={batch}")
         w = df.write.mode("overwrite")
         if partition_by:
-            # sub-partitioned layout (e.g. seen's kbucket — the parquet
-            # realization of Iceberg's bucket(key_hash) spec): readers
+            # sub-partitioned layout (e.g. seen's kbucket): readers
             # filtering on the partition column get directory pruning
             w = w.partitionBy(*partition_by)
         # label the write's stages in the event log (job descriptions are
@@ -86,8 +68,7 @@ class CheckpointStore:
         cluster — driver-serial either way). For tables whose per-round
         payload is O(bytes), that latency IS the cost, and it lands on
         every round's critical path — a level-independent Amdahl term of
-        the N→4N scaling gate. In an Iceberg deployment this maps to a
-        driver-side ``append_files`` commit of one small data file.
+        the N→4N scaling gate.
 
         ``columns``: name → list of Python values; ``schema``: a pyarrow
         schema pinning the exact types the Spark writer used (int32/int64
@@ -184,9 +165,7 @@ class CheckpointStore:
     # crash-safe via a commit journal (_compact_journal.json): data is
     # fully written to a temp dir first, then journal -> remove merged
     # dirs -> rename temp -> remove journal; _recover_compactions()
-    # finishes any step a crash interrupted (idempotent). An Iceberg
-    # deployment maps this to rewrite_data_files (leveled/binpack); the
-    # parquet realization keeps the same reader-visible layout contract.
+    # finishes any step a crash interrupted (idempotent).
 
     def maybe_compact(
         self, table: str, upto: int,

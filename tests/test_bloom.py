@@ -61,3 +61,33 @@ def test_crawl_with_bloom_matches_oracle(spark, tmp_path):
     want = sorted((r.url, r.round, r.disc_order) for r in oracle.order)
     assert got == want
     assert {r["url_key"] for r in res.seen_df().collect()} == oracle.seen
+
+
+def test_crawl_with_bloom_limit_no_drain_rolls(spark, tmp_path):
+    """basic16 with limit=3 and one fetch per round trips the limit in
+    round 0 and drains the carried frontier in rounds 1-3. Drain rounds
+    never probe, so no bloom snapshot is written past the one round 0
+    rolled (batch 1), and the crawl still matches the oracle."""
+    import os
+
+    from crawlspark.synth import basic16
+
+    pages, seeds = basic16()
+    kw = dict(host="example.com", limit=3, host_budget=1)
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path / "ck"), use_bloom=True,
+        bloom_buckets=4, bloom_bits=1 << 16, **kw,
+    )
+    res = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg).run(seeds)
+    oracle = oracle_crawl(pages_index(pages), seeds, **kw)
+    assert res.limit_reached and res.rounds == 4
+    batches = sorted(
+        int(d.split("=")[1]) for d in os.listdir(tmp_path / "ck" / "bloom")
+        if d.startswith("batch=")
+    )
+    assert batches == [0, 1]
+    got = sorted(
+        (r["url"], r["round"], r["disc_order"]) for r in res.order_df().collect()
+    )
+    assert got == sorted((r.url, r.round, r.disc_order) for r in oracle.order)
+    assert {r["url_key"] for r in res.seen_df().collect()} == oracle.seen

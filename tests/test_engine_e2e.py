@@ -133,32 +133,31 @@ def test_chain_rounds(spark, tmp_path):
 
 
 def test_seen_probe_auto_guard(spark, tmp_path):
-    """The auto probe guard (VERDICT r2 / ADVICE r2): per round, the
+    """The probe guard (VERDICT r2 / ADVICE r2): per round, the
     broadcast seen-probe is chosen only while the candidate set fits the
     byte budget; beyond it the round falls back to the shuffling merge
-    anti-join. Output must be identical under every mode."""
+    anti-join. Output must be identical under every budget."""
     pages, seeds = basic16()
     pages_df = spark.createDataFrame(pages, PAGES)
     oracle = oracle_crawl(pages_index(pages), seeds, "example.com")
 
     def run(**kw):
-        ckpt = tmp_path / ("ckpt_" + "_".join(f"{k}" for k in kw))
+        ckpt = tmp_path / ("ckpt_" + "_".join(f"{k}{v}" for k, v in kw.items()))
         cfg = CrawlConfig(checkpoint_dir=str(ckpt), host="example.com", **kw)
         c = Crawler(spark, pages_df, cfg)
         return c, c.run(seeds)
 
-    # default auto: every round is comfortably under 64 MiB -> broadcast
+    # default budget: every round is comfortably under 64 MiB -> broadcast
     c_auto, res_auto = run()
-    assert c_auto.cfg.seen_probe == "auto"
     assert c_auto.probe_choices and set(c_auto.probe_choices) == {"broadcast"}
     assert_matches_oracle(res_auto, oracle)
 
-    # auto with a 0-byte budget: every round must fall back to merge
+    # a 0-byte budget: every round must fall back to merge
     c_merge, res_merge = run(broadcast_probe_max_bytes=0)
     assert c_merge.probe_choices and set(c_merge.probe_choices) == {"merge"}
     assert_matches_oracle(res_merge, oracle)
 
-    # explicit override still honored
-    c_b, res_b = run(seen_probe="broadcast")
+    # a budget no round can reach: every round broadcasts
+    c_b, res_b = run(broadcast_probe_max_bytes=1 << 62)
     assert set(c_b.probe_choices) == {"broadcast"}
     assert_matches_oracle(res_b, oracle)

@@ -315,3 +315,59 @@ def test_torn_round_seen_bloom_resume_no_key_dropped(spark, tmp_path):
     seen_res = [r["url_key"] for r in resumed.seen_df().collect()]
     assert set(seen_res) == seen_full
     assert len(seen_res) == len(seen_full)  # no duplicated key either
+
+
+@pytest.mark.parametrize("table", ["metrics", "seen"])
+def test_sink_failure_before_drain_rounds_fails_run(
+    spark, tmp_path, monkeypatch, table
+):
+    """basic16 with limit=3 and one fetch per round trips the limit in
+    round 0 and drains in rounds 1-3 (no seen read, so no mid-round
+    commit join). A failed sink must still fail run() and leave the
+    committed state at or before the failed round. "metrics" fails the
+    first drain round's commit; "seen" fails round 0's commit (seen batch
+    1), whose order append must still have finished when run() raises."""
+    import json
+    import threading
+    import time
+
+    from crawlspark.storage import CheckpointStore
+
+    failed = threading.Event()
+    order_done = []
+    append, append_local = CheckpointStore.append, CheckpointStore.append_local
+
+    def fail():
+        failed.set()
+        raise RuntimeError(f"injected {table} sink failure")
+
+    def patched_append(self, t, df, batch, *a, **k):
+        if table == "seen" and (t, batch) == ("seen", 1):
+            fail()
+        if table == "seen" and (t, batch) == ("order", 0):
+            # still writing well after the seen append fails
+            failed.wait(60)
+            time.sleep(5)
+            append(self, t, df, batch, *a, **k)
+            order_done.append(batch)
+            return
+        append(self, t, df, batch, *a, **k)
+
+    def patched_append_local(self, t, columns, schema, batch):
+        if table == "metrics" and (t, batch) == ("metrics", 1):
+            fail()
+        append_local(self, t, columns, schema, batch)
+
+    monkeypatch.setattr(CheckpointStore, "append", patched_append)
+    monkeypatch.setattr(CheckpointStore, "append_local", patched_append_local)
+    pages, seeds = basic16()
+    crawler = make_crawler(
+        spark, tmp_path, pages, host="example.com", limit=3, host_budget=1
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        crawler.run(seeds)
+    state = json.loads((tmp_path / "ckpt" / "_state.json").read_text())
+    failed_round = {"metrics": 1, "seen": 0}[table]
+    assert state["next_round"] <= failed_round
+    if table == "seen":
+        assert order_done == [0]

@@ -229,8 +229,8 @@ def test_bench_graph_is_fully_native(spark):
 
 def test_engine_native_toggle_identical(spark, tmp_path):
     """Full-crawl A/B: richsite (media spans + every href form) crawled
-    with the native tier on vs off — identical order table and span
-    documents."""
+    with the native tier on vs off (an identity process_fn forces the
+    exact tier) — identical order table and span documents."""
     from crawlspark.engine import CrawlConfig, Crawler
 
     pages, seeds = richsite(n_articles=8)
@@ -240,7 +240,7 @@ def test_engine_native_toggle_identical(spark, tmp_path):
         cfg = CrawlConfig(
             checkpoint_dir=str(ckpt),
             host="rich.example",
-            native_parse=native,
+            process_fn=None if native else (lambda u, s: s),
         )
         res = Crawler(spark, pages_df, cfg).run(seeds)
         order = [

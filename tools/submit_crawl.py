@@ -51,8 +51,6 @@ def main() -> None:
     p.add_argument("--partitions", type=int, default=0)
     p.add_argument("--use-bloom", action="store_true")
     p.add_argument("--broadcast-pages", action="store_true")
-    p.add_argument("--seen-probe", default="auto",
-                   choices=("auto", "broadcast", "merge"))
     p.add_argument("--resume", action="store_true",
                    help="resume from an existing checkpoint store")
     args = p.parse_args()
@@ -86,7 +84,6 @@ def main() -> None:
         num_partitions=args.partitions or None,
         broadcast_pages=args.broadcast_pages,
         use_bloom=args.use_bloom,
-        seen_probe=args.seen_probe,
     )
     result = Crawler(spark, pages, cfg).run(seeds, resume=args.resume)
 
