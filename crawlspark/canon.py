@@ -450,7 +450,7 @@ def canonize_links(df, href_col, udf, native: bool = True):
     (purl.normalize/normalize_key); the split is a pure optimization.
 
     Composition of canonize_links_prepared + canonize_links_split; heavy
-    callers (the engine's per-round candidate pipeline) should persist
+    callers (the engine's per-round candidate pipeline) should cache
     the prepared projection between the two so the mask battery runs
     once per link — this convenience wrapper leaves the plan uncached
     (correct, but catalyst collapses the projection into both union
@@ -584,9 +584,10 @@ def register_udfs():
 
     # NOTE on double evaluation: a deterministic Python UDF referenced by
     # both a Filter and a Project gets cloned by filter pushdown and was
-    # measured evaluating 2-3x per row. The engine prevents this with an
-    # explicit persist barrier between the UDF projection and the filters
-    # (engine.py candidate pipeline) — NOT by marking the UDFs
+    # measured evaluating 2-3x per row. The engine prevents this with a
+    # leaf barrier (frontier.leaf, a lazy local checkpoint) between the
+    # UDF projection and the filters (engine.py candidate pipeline):
+    # nothing is pushed through its LogicalRDD — NOT by marking the UDFs
     # non-deterministic, which blocked enough other optimizations to be a
     # net 7x loss on the window/anti-join stages.
     return {

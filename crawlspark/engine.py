@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from . import canon
 from .fetch import resolve_fetch
-from .frontier import dedup_candidates, order_buckets
+from .frontier import dedup_candidates, leaf, order_buckets, release
 from .parse import mark_dirty, parse_stage
 from .robots import apply_robots
 from .schedule import schedule_round, spread_for_fetch
@@ -241,10 +241,12 @@ class Crawler:
         # mirror (written driver-side — see _roll_bloom_local)
         self._bloom_dict = None
         # pipelined round commit (see run()): the pending commit future,
-        # the in-memory next-frontier handoff, and the persisted frontier
-        # cache the NEXT commit must release
+        # the order-append pool of the round in flight (until its commit
+        # owns it), the in-memory next-frontier handoff, and the frontier
+        # leaf the NEXT commit must release
         self._pending_commit = None
         self._commit_pool = None
+        self._order_pool = None
         self._next_frontier = None
         self._frontier_handle = None
         # robots crawl-delay → per-host budgets (broadcast policy state)
@@ -487,7 +489,7 @@ class Crawler:
         results = _parallel_jobs(*init_jobs)
         if self.cfg.use_bloom:
             self._roll_bloom_local(results[-1], 0)
-        res.unpersist()
+        res.release()
         return res.pushed_end, res.limit_reached
 
     # -- main loop ------------------------------------------------------
@@ -497,7 +499,6 @@ class Crawler:
         sitemap_entries: Optional[DataFrame] = None,
         resume: bool = False,
     ) -> CrawlResult:
-        cfg = self.cfg
         if self._commit_pool is None:
             self._commit_pool = ThreadPoolExecutor(max_workers=1)
         if self._pending_commit is not None:
@@ -509,11 +510,7 @@ class Crawler:
             except Exception:
                 pass
             self._pending_commit = None
-        if self._frontier_handle is not None:
-            try:
-                self._frontier_handle.unpersist()
-            except Exception:
-                pass
+        release(self._frontier_handle)
         self._next_frontier = None
         self._frontier_handle = None
         state = self.store.read_state() if resume else None
@@ -543,7 +540,22 @@ class Crawler:
                 self.store.truncate_after(t, r - 1)
             for t in ("seen", "frontier", "bloom"):
                 self.store.truncate_after(t, r)
+        try:
+            return self._run_rounds(r, pushed, limit_reached, n_frontier)
+        except BaseException:
+            # the round in flight still owns its order append: let it
+            # finish, so no write to order/batch=r outlives run() (a
+            # run(resume=True) started right after would race it)
+            if self._order_pool is not None:
+                self._order_pool.shutdown()
+                self._order_pool = None
+            raise
 
+    def _run_rounds(
+        self, r: int, pushed: int, limit_reached: bool,
+        n_frontier: Optional[int],
+    ) -> CrawlResult:
+        cfg = self.cfg
         # Pipelined round commit: each round's independent sinks + state
         # write + compaction run as ONE background chain (single-thread
         # pool ⇒ commits serialize in round order) while the NEXT round's
@@ -558,7 +570,7 @@ class Crawler:
         drained = False
         while cfg.max_rounds == 0 or r < cfg.max_rounds:
             if self._next_frontier is not None:
-                # in-memory handoff from the previous round (persisted;
+                # in-memory handoff from the previous round (a leaf;
                 # byte-identical rows to the parquet snapshot the commit
                 # chain is writing concurrently)
                 frontier = self._next_frontier
@@ -600,20 +612,20 @@ class Crawler:
             fetched_handle = None
             if native:
                 # the native/exact tier split scans `fetched` twice (two
-                # disjoint filters); persist the round batch so the fetch
-                # join runs once. DISK_ONLY for the same reason as the
+                # disjoint filters); cache the round batch as a leaf so the
+                # fetch join runs once. DISK_ONLY for the same reason as the
                 # pages cache: HTML bodies must never be heap-resident,
                 # and spark.local.dir sits on tmpfs in the bench. Cost is
                 # bounded by ROUND size, never corpus size. (Measured
-                # alternative, rejected: skipping this persist and
+                # alternative, rejected: skipping this cache and
                 # streaming the join per tier re-runs the probe-side
                 # hash build and the routing grammar per tier — paired
                 # A/B at local[8]/400k pages: 176.4 s -> 229.5 s.)
                 # routing flag computed INTO the cache: the clean-page
                 # grammar runs once per page here; the tier filters in
                 # parse_stage read the cached boolean
-                fetched_handle = mark_dirty(fetched).persist(
-                    StorageLevel.DISK_ONLY
+                fetched_handle = leaf(
+                    mark_dirty(fetched), StorageLevel.DISK_ONLY
                 )
                 fetched = fetched_handle
             parsed = parse_stage(
@@ -631,7 +643,7 @@ class Crawler:
                     F.lit(None).cast(parsed.schema["links"].dataType).alias("links"),
                 )
                 parsed = parsed.unionByName(denied_rows)
-            parsed = parsed.persist()
+            parsed = leaf(parsed)
 
             # SNK1: documents (Process runs even after the limit flag) —
             # this write is also the job that materializes the parsed
@@ -648,7 +660,7 @@ class Crawler:
             # from a driver thread so it overlaps the fused agg below
             # (independent sinks; per-round serial latency is the Amdahl
             # term of the scaling gate)
-            order_pool = ThreadPoolExecutor(max_workers=1)
+            order_pool = self._order_pool = ThreadPoolExecutor(max_workers=1)
             order_fut = order_pool.submit(
                 self.store.append,
                 "order",
@@ -699,7 +711,7 @@ class Crawler:
                 )
                 # canonicalization: JVM-native for the common absolute/
                 # root-relative case, exact fused pandas UDF for the rest
-                # (canon.py). The persist sits on the ONE-PASS prepared
+                # (canon.py). The leaf sits on the ONE-PASS prepared
                 # projection, BELOW the fast/slow union: the mask battery
                 # and all native value expressions run exactly once per
                 # link when the fused agg below materializes the cache
@@ -707,22 +719,23 @@ class Crawler:
                 # re-evaluated the mask towers per branch and per output
                 # column — the round-4 event logs showed it as the
                 # largest stage of the crawl; the one-pass cached shape
-                # measured ~4x faster at 19.35M links). The persist is
-                # also the optimizer barrier that keeps filter pushdown
-                # from cloning the UDF into a Filter (~3x Python CPU,
-                # measured in round 2).
-                cands_pre = canon.canonize_links_prepared(
-                    links, "href"
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                # measured ~4x faster at 19.35M links). The leaf is also
+                # the optimizer barrier that keeps filter pushdown from
+                # cloning the UDF into a Filter (~3x Python CPU, measured
+                # in round 2): nothing is pushed through a LogicalRDD.
+                cands_pre = leaf(
+                    canon.canonize_links_prepared(links, "href"),
+                    StorageLevel.MEMORY_AND_DISK,
+                )
                 round_handles.append(cands_pre)
                 cands_fast, cands_slow = canon.canonize_links_split(
                     cands_pre, self.udfs["canonize"]
                 )
-                # the slow (dirty-href) side is persisted POST-UDF so the
+                # the slow (dirty-href) side is cached POST-UDF so the
                 # exact resolver runs once per dirty link, not once per
                 # consumer (the fused agg materializes it; the dedup scan
-                # reads both caches) — tiny by the two-tier premise
-                cands_slow = cands_slow.persist(StorageLevel.MEMORY_AND_DISK)
+                # reads both leaves) — tiny by the two-tier premise
+                cands_slow = leaf(cands_slow, StorageLevel.MEMORY_AND_DISK)
                 round_handles.append(cands_slow)
                 cands_raw = cands_fast.unionByName(cands_slow)
 
@@ -941,19 +954,20 @@ class Crawler:
                 nxt_core = parts[0]
                 for p in parts[1:]:
                     nxt_core = nxt_core.unionByName(p)
-                # localCheckpoint, NOT persist: the in-memory frontier
+                # a leaf, like every round cache: the in-memory frontier
                 # handoff to round r+1 must TRUNCATE lineage the way the
                 # parquet round-trip used to — a plain persist leaves the
                 # logical plan referencing the whole previous round's
                 # tree, which compounds exponentially across rounds
-                # (measured: a 2 GB plan string by round ~10). Lazy
-                # (eager=False) so the materialization happens inside the
-                # background snapshot write, off the critical path. The
-                # DURABLE checkpoint is still the parquet snapshot below;
-                # the local checkpoint only serves the in-session
-                # pipeline (on executor loss the round job fails and the
-                # crawl resumes from the parquet state — same contract).
-                nxt_core = nxt_core.localCheckpoint(eager=False)
+                # (measured: a 2 GB plan string by round ~10). This is
+                # NOT off the critical path: under AQE the call itself
+                # runs the upstream shuffle stages (the dense-order
+                # window) on this thread; only the final stage, which
+                # stores the blocks, runs inside the background snapshot
+                # write.
+                # The DURABLE checkpoint is still the parquet snapshot
+                # below; the leaf only serves the in-session pipeline.
+                nxt_core = leaf(nxt_core)
                 tail_jobs.append(
                     lambda df=nxt_core, b=r + 1: self.store.append(
                         "frontier", df.withColumn("round", F.lit(b)), b
@@ -965,7 +979,7 @@ class Crawler:
             # ---- pipelined commit: the round's independent sinks (seen/
             # bloom/lineage/metrics/frontier snapshot) all read cached
             # inputs. Submit them + the state write + compaction +
-            # unpersists as ONE background chain on the single-thread
+            # releases as ONE background chain on the single-thread
             # commit pool (chains serialize in round order) and let round
             # r+1's fetch/parse head run concurrently off the in-memory
             # frontier. Same crash contract: state_r is written only
@@ -1022,14 +1036,13 @@ class Crawler:
                     "seen", upto=rr + 1, partition_by=["kbucket"],
                     round_col="first_round", fanin=cfg.seen_compact_fanin,
                 )
-                # release round-r caches (the next frontier is its own
-                # cache, already materialized by the snapshot write above)
+                # release round-r leaves (the next frontier is its own
+                # leaf, already materialized by the snapshot write above)
                 for h in handles:
-                    h.unpersist()
+                    release(h)
                 if dres is not None:
-                    dres.unpersist()
-                if prev_frontier is not None:
-                    prev_frontier.unpersist()
+                    dres.release()
+                release(prev_frontier)
 
             # the previous commit must succeed before this one queues:
             # a drain round skips the seen-read join above, and an
@@ -1037,6 +1050,7 @@ class Crawler:
             # state past the torn round (a no-op in any other round)
             self._join_commit()
             self._pending_commit = self._commit_pool.submit(_commit)
+            self._order_pool = None  # the commit chain owns it now
             self._frontier_handle = nxt_core
             self._next_frontier = nxt_core
             r += 1
@@ -1050,9 +1064,8 @@ class Crawler:
         # reaching here, the next run() (or interpreter exit) waits out
         # the orphaned chain — see the entry guard above.
         self._join_commit()
-        if self._frontier_handle is not None:
-            self._frontier_handle.unpersist()
-            self._frontier_handle = None
+        release(self._frontier_handle)
+        self._frontier_handle = None
         self._next_frontier = None
         # only a drained frontier finishes the crawl; a max_rounds stop
         # leaves state resumable (north rule: resumable from any round)

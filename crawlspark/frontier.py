@@ -24,6 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +32,30 @@ from pyspark.sql import functions as F
 # ship as a broadcast-joined DataFrame instead of a create_map literal
 # (a 10^5-entry literal in every round's plan bloats compile time)
 _OFFSETS_LITERAL_MAX = 256
+
+
+def leaf(df: DataFrame, level: Optional[StorageLevel] = None) -> DataFrame:
+    """Cache ``df`` as a lineage-truncated plan leaf (a lazy local
+    checkpoint): every later DataFrame built on it plans against one
+    ``LogicalRDD`` instead of the whole upstream tree. A ``persist()``
+    keeps that tree inside its ``InMemoryRelation``, so nested persists
+    make every action re-analyse, cache-match and re-print the whole
+    round's plan (multi-MB) on the driver. Under AQE the upstream
+    shuffle stages run here, on the calling thread; the first action over
+    the leaf computes and stores its blocks at ``level`` (Spark's
+    local-checkpoint default, memory and disk, when None). The leaf is
+    also an optimiser barrier: no filter is pushed into (or UDF cloned
+    from) the plan below it. Checkpoint blocks cannot be recomputed:
+    executor loss fails the job, and the crawl resumes from its parquet
+    state. Free with ``release``."""
+    return df.localCheckpoint(eager=False, storageLevel=level)
+
+
+def release(df: Optional[DataFrame]) -> None:
+    """Free the blocks of a ``leaf`` (non-blocking). ``DataFrame.unpersist``
+    does nothing on a checkpoint, so this goes through its RDD."""
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def order_buckets(
@@ -81,17 +106,16 @@ def with_dense_order(
     never exactness.
 
     Without ``bucket_col`` (unknown bounds), falls back to
-    repartitionByRange + spark_partition_id; the input is persisted
-    internally (two actions share the range exchange)."""
+    repartitionByRange + spark_partition_id; the input is cached as a
+    ``leaf`` internally (two actions share the range exchange)."""
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     if bucket_col is not None:
         ranged = df.withColumn("_pid", bucket_col.cast("int"))
     else:
-        ranged = (
+        ranged = leaf(
             df.repartitionByRange(num_partitions, *order_cols)
             .withColumn("_pid", F.spark_partition_id())
-            .persist()
         )
         if handles is not None:
             handles.append(ranged)
@@ -157,7 +181,7 @@ def _anti_seen(cands: DataFrame, seen: DataFrame, probe: str) -> DataFrame:
     left_semi against the candidate keys (duplicate-key extraction), then
     the (small) duplicate-key set broadcasts into a left_anti — the seen
     side never shuffles or sorts. probe="merge": plain left_anti.
-    ``cands`` must be persisted by the caller in broadcast mode (it is
+    ``cands`` must be cached by the caller in broadcast mode (it is
     referenced twice)."""
     if probe == "broadcast":
         dup_keys = seen.select("seen_key").join(
@@ -176,14 +200,11 @@ class DedupResult:
     n_new: int  # unique candidates not yet seen
     n_kept: int  # after budget cut
     limit_reached: bool
-    handles: tuple = ()  # persisted DataFrames for the caller to unpersist
+    handles: tuple = ()  # leaves for the caller to release
 
-    def unpersist(self):
+    def release(self):
         for h in self.handles:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
+            release(h)
 
 
 def dedup_candidates(
@@ -234,14 +255,14 @@ def dedup_candidates(
     if limit > 0 and n_attempts is None:
         # attempt counting is only consulted by the limit state machine;
         # skip the extra job entirely in the unlimited case
-        cands = cands.persist()
+        cands = leaf(cands)
         handles.append(cands)
         n_attempts = cands.count()
     if n_attempts is None:
         n_attempts = -1  # unknown, not needed (limit == 0)
     if limit > 0 and n_attempts == 0:
         for h in handles:
-            h.unpersist()
+            release(h)
         return DedupResult(None, pushed, 0, 0, 0, 0, limit_reached)
 
     order_key = [F.col("parent_disc"), F.col("link_index")]
@@ -260,16 +281,16 @@ def dedup_candidates(
             from .bloom import flag_candidates
 
             spark, bdict, bcfg = bloom
-            flagged = flag_candidates(
-                spark, first, "seen_key", bdict, bcfg
-            ).persist()
+            flagged = leaf(
+                flag_candidates(spark, first, "seen_key", bdict, bcfg)
+            )
             handles.append(flagged)
             maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
             definite = flagged.filter(~F.col("_maybe")).drop("_maybe")
             new = _anti_seen(maybe, seen, seen_probe).unionByName(definite)
         else:
             if seen_probe == "broadcast":
-                first = first.persist()
+                first = leaf(first)
                 handles.append(first)
             new = _anti_seen(first, seen, seen_probe)
     else:
@@ -277,10 +298,11 @@ def dedup_candidates(
     # Materialize the deduped set ONCE before dense ordering: the range
     # partitioner samples its input to pick bounds, so an uncached input
     # would re-run the whole explode→resolve→window→anti-join chain three
-    # times (sample, exchange, counts). With the cache, sampling and the
-    # exchange read a small cached set. n_new falls out of the dense-order
-    # per-partition counts (no dedicated count job).
-    new = new.persist()
+    # times (sample, exchange, counts). With the leaf, sampling and the
+    # exchange read a small cached set, and the fresh rows the round's
+    # sinks write plan against it alone. n_new falls out of the
+    # dense-order per-partition counts (no dedicated count job).
+    new = leaf(new)
     handles.append(new)
     _new_max_out: list = []
     new, n_new = with_dense_order(

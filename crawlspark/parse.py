@@ -383,7 +383,7 @@ _DIRTY_COL = "_parse_dirty"
 def mark_dirty(fetched):
     """Materializable routing flag: True ⇔ the row is fetch-ok AND the
     page fails the clean grammar (must cross into the exact Arrow parse).
-    Callers compute it once into a persisted round batch; the two tier
+    Callers compute it once into a cached round batch; the two tier
     filters in parse_stage are then cheap cached-column scans instead of
     two full regex passes per page."""
     from pyspark.sql import functions as F

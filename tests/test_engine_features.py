@@ -371,3 +371,41 @@ def test_sink_failure_before_drain_rounds_fails_run(
     assert state["next_round"] <= failed_round
     if table == "seen":
         assert order_done == [0]
+
+
+def test_failed_run_waits_for_inflight_order_append(
+    spark, tmp_path, monkeypatch
+):
+    """Round 0's commit fails (seen batch 1) while round 1 runs, so run()
+    raises at round 1's commit join. Round 1's order append is already in
+    flight then; it must have finished when run() raises, or a
+    run(resume=True) started right after could race it on order/batch=1."""
+    import threading
+    import time
+
+    from crawlspark.storage import CheckpointStore
+
+    failed = threading.Event()
+    order_done = []
+    append = CheckpointStore.append
+
+    def patched_append(self, t, df, batch, *a, **k):
+        if (t, batch) == ("seen", 1):
+            failed.set()
+            raise RuntimeError("injected seen sink failure")
+        if (t, batch) == ("order", 1):
+            # still writing well after round 0's commit fails
+            failed.wait(60)
+            time.sleep(5)
+            append(self, t, df, batch, *a, **k)
+            order_done.append(batch)
+            return
+        append(self, t, df, batch, *a, **k)
+
+    monkeypatch.setattr(CheckpointStore, "append", patched_append)
+    pages, seeds = basic16()
+    crawler = make_crawler(spark, tmp_path, pages, host="example.com")
+    with pytest.raises(RuntimeError, match="injected"):
+        crawler.run(seeds)
+    assert order_done == [1]
+    assert crawler.store.read_state()["next_round"] == 0

@@ -1,6 +1,7 @@
 """Physical-plan shape assertions for the round-2 scale fixes: the seen
 side must never shuffle or sort under the broadcast probe, and the
-scheduler's carryover must not re-shuffle the frontier through a join."""
+scheduler's carryover must not re-shuffle the frontier through a join.
+Every per-round cache is a plan leaf that the crawl frees again."""
 
 from pyspark.sql import functions as F
 
@@ -183,3 +184,99 @@ def test_dense_order_bucket_col_no_sampling_identical_index(spark):
     ]
     assert end_b == end_ref == 3 + 5000
     assert got_b == got_ref
+
+
+def _stored_rdds(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _wait_released(spark, ids: set, timeout: float = 30.0) -> set:
+    """Block removal is asynchronous: poll until none of ``ids`` is
+    stored any more (or the timeout passes); returns those still held."""
+    import time
+
+    deadline = time.monotonic() + timeout
+    while ids & _stored_rdds(spark) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return ids & _stored_rdds(spark)
+
+
+def test_leaf_truncates_plan_and_release_frees_blocks(spark):
+    """A leaf plans as one LogicalRDD (no upstream tree, no
+    InMemoryRelation), stores its blocks on the first action, and
+    ``release`` frees them — ``DataFrame.unpersist`` would not."""
+    from crawlspark.frontier import leaf, release
+
+    before = _stored_rdds(spark)
+    df = leaf(_mk_cands(spark, n=200).filter(F.col("parent_disc") % 2 == 0))
+    qe = df.select("seen_key")._jdf.queryExecution()
+    assert "LogicalRDD" in qe.analyzed().treeString()
+    assert "Filter" not in qe.analyzed().treeString()
+    assert "InMemoryRelation" not in qe.withCachedData().treeString()
+    assert df.count() == 100
+    held = _stored_rdds(spark) - before
+    assert held
+    release(df)
+    assert _wait_released(spark, held) == set()
+
+
+def test_crawl_sink_plans_are_leaf_sized(spark, tmp_path, monkeypatch):
+    """Every DataFrame a 2-round crawl hands to CheckpointStore.append
+    plans against the round's leaves, not the whole round tree: its
+    cache-substituted plan holds no InMemoryRelation (a nested persist
+    carries its entire cached plan inside it) and its analysed plan text
+    stays under a fixed bound. Plan shape, not data size, decides both,
+    so the bound holds for any input."""
+    from crawlspark.engine import CrawlConfig, Crawler
+    from crawlspark.schemas import PAGES
+    from crawlspark.storage import CheckpointStore
+    from crawlspark.synth import basic16
+
+    plans = []
+    append = CheckpointStore.append
+
+    def recording_append(self, table, df, batch, *a, **k):
+        qe = df._jdf.queryExecution()
+        plans.append((
+            table, batch, qe.analyzed().treeString(),
+            qe.withCachedData().treeString(),
+        ))
+        return append(self, table, df, batch, *a, **k)
+
+    monkeypatch.setattr(CheckpointStore, "append", recording_append)
+    pages, seeds = basic16()
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path / "ckpt"), host="example.com",
+        max_rounds=2,
+    )
+    res = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg).run(seeds)
+    assert res.rounds == 2
+    tables = {t for t, *_ in plans}
+    assert {"documents", "order", "seen", "frontier"} <= tables
+    for table, batch, analysed, cached in plans:
+        assert "InMemoryRelation" not in cached, (table, batch)
+        assert len(analysed) < 64 * 1024, (table, batch, len(analysed))
+
+
+def test_run_frees_every_round_leaf(spark, tmp_path):
+    """After run() returns, the crawl holds no round data in storage: the
+    only stored RDDs it added are the Crawler's pages and hosts caches.
+    max_rounds stops the crawl with a next frontier still handed off, so
+    the last frontier leaf must be freed as well."""
+    from crawlspark.engine import CrawlConfig, Crawler
+    from crawlspark.schemas import PAGES
+    from crawlspark.synth import basic16
+
+    before = _stored_rdds(spark)
+    pages, seeds = basic16()
+    cfg = CrawlConfig(
+        checkpoint_dir=str(tmp_path / "ckpt"), multi_host=True,
+        broadcast_pages=False, max_rounds=2,
+    )
+    crawler = Crawler(spark, spark.createDataFrame(pages, PAGES), cfg)
+    res = crawler.run(seeds)
+    assert res.rounds == 2
+    assert not crawler.store.read_state()["finished"]
+    crawler.pages.unpersist(True)
+    crawler._hosts_df.unpersist(True)
+    assert _wait_released(spark, _stored_rdds(spark) - before) == set()
